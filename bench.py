@@ -1,7 +1,8 @@
 """Benchmark harness: runs the headline queries at $SPARK_GRAFT_SF_DIR
 (default /root/testdata/sf0.1) on local[$SPARK_GRAFT_CPUS] and prints
-ONE JSON line: {"metric": ..., "value": total_sec, "unit": "sec",
-"queries": {name: sec}, "sf": ...}.
+TWO JSON lines: the extended operators' timings, then the headline
+{"metric": ..., "value": total_sec, "unit": "sec", "queries": {name:
+sec}, "sf": ...} last.
 
 Each query is executed to completion (noop sink) after a warm-up of
 the session; times are wall-clock per query, MEDIAN-OF-N (default 3
@@ -449,34 +450,6 @@ def main() -> None:
             print(f"EXTENDED FAILED {name}: {exc}", file=sys.stderr)
             extended[name] = None
 
-    # Serve-path disclosure (r15, additions-only): these queries read a
-    # session-scoped memo (_SIG_MEMO minhash signatures, _IVFPQ_MEMO
-    # trained index parts) that the warm pass populates, so their timed
-    # rows above measure the SERVE path (post-training cost) — the
-    # documented serving-shape contract, but not an end-to-end number.
-    # For each, also record ONE memo-cleared end-to-end sample so the
-    # artifact carries both costs explicitly. Existing rows unchanged.
-    SERVE_PATH_HEADLINE = ["dedup_near", "dedup_simhash"]
-    SERVE_PATH_EXTENDED = [
-        "dedup_incremental",
-        "dedup_incremental_minhash",
-        "join_set_similarity_verify",
-        "sim_topk_ivfpq",
-        "sink_ann_index_roundtrip",
-        "sink_ann_index_upsert",
-    ]
-    from parquet_processor_spark.ops.dedup import _SIG_MEMO
-    from parquet_processor_spark.ops.vector import _IVFPQ_MEMO
-
-    queries_e2e: dict[str, float | None] = {}
-    for name in SERVE_PATH_HEADLINE + SERVE_PATH_EXTENDED:
-        _SIG_MEMO.clear()
-        _IVFPQ_MEMO.clear()
-        try:
-            queries_e2e[name] = round(run_once(name), 3)
-        except Exception:  # noqa: BLE001
-            queries_e2e[name] = None
-
     calib_end = round(calibration_probe(), 3)
     calib_io_end = round(calibration_probe_io(), 3)
 
@@ -545,10 +518,11 @@ def main() -> None:
         "unit": "sec",
         "sf": sf_val,
         "extended": extended,
-        # memo-backed rows (serve-path) and their one-shot end-to-end
-        # samples — see the serve-path disclosure note above
-        "serve_path": SERVE_PATH_HEADLINE + SERVE_PATH_EXTENDED,
-        "queries_e2e": queries_e2e,
+        # rows that time only a serve path, with their end-to-end
+        # samples: empty, every row is timed end to end; the keys keep
+        # the line's shape
+        "serve_path": [],
+        "queries_e2e": {},
     }
     headline_line = {
         "metric": "headline_queries_total_wall",
@@ -582,11 +556,8 @@ def main() -> None:
         # Bounded so the driver's 2000-char stdout tail always holds
         # the full line (r5 lesson); BENCH_LOCAL.json has every min.
         "regressed_min": regressed_min,
-        # headline rows whose timed passes ride a session memo the warm
-        # pass populated (serve-path cost); memo-cleared end-to-end
-        # samples are on the extended line (queries_e2e) and in
-        # BENCH_LOCAL.json
-        "serve_path": SERVE_PATH_HEADLINE,
+        # headline rows timing a serve path only: none (see ext_line)
+        "serve_path": [],
     }
     with open(os.path.join(os.path.dirname(os.path.abspath(__file__)), "BENCH_LOCAL.json"), "w") as f:
         json.dump(
@@ -595,8 +566,8 @@ def main() -> None:
                 "queries_min": times_min,
                 "extended": extended,
                 "spread": spread,
-                "serve_path": SERVE_PATH_HEADLINE + SERVE_PATH_EXTENDED,
-                "queries_e2e": queries_e2e,
+                "serve_path": [],
+                "queries_e2e": {},
             },
             f,
             indent=1,

@@ -58,6 +58,14 @@ def materializing_count(df: DataFrame) -> int:
     probe primitive (guide §5 — fewer driver-synchronized jobs):
     checkpoint materialization + convergence statistic in one job.
     No Python-side row movement — the count happens in the JVM.
+
+    Precondition: the plan of ``df`` is narrow — no Exchange between
+    its leaves (scans, checkpoints) and the root, as for a filter or
+    projection over a checkpointed frame. Under AQE each shuffle stage
+    of a wide plan runs as a job of its own before the count, so the
+    one-job claim does not hold there. ``_jdf.queryExecution().toRdd()``
+    is private Spark API; tests/test_plan_quality.py pins both the
+    one-job and the checkpoint-materialization behavior.
     """
     return df._jdf.queryExecution().toRdd().count()
 

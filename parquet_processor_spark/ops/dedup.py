@@ -384,116 +384,81 @@ def minhash_signature(hashes_col: F.Column, k: int = _K) -> F.Column:
     )
 
 
-# Session-scoped signature memo: a fresh .cache() per call would
-# register a NEW cache entry every time the query re-runs (bench
-# passes, recall gates, repeated driver checks), re-materializing the
-# expensive signature stage each time AND accumulating dead cached
-# partitions in the shared local-mode heap (the SCALE.md operational
-# note — measured as the dedup tail's 1.5-2x session drift). Keyed by
-# (applicationId, context startTime, sf_dir) — stable identifiers
-# that, unlike id(sparkContext), cannot be recycled by the allocator
-# after a stopped context is GC'd. Entries are validated on every hit
-# (context alive, plan still registered in the cache manager) so a
-# spark.catalog.clearCache() or a restarted session rebuilds rather
-# than serving a stale/dead DataFrame. Testdata dirs are immutable.
-_SIG_MEMO: dict = {}
-
-
-def _minhash_sig_cached(spark: SparkSession, sf: str) -> DataFrame:
-    sc = spark.sparkContext
-    key = (sc.applicationId, sc.startTime, sf)
-    sig = _SIG_MEMO.get(key)
-    if sig is not None:
-        try:
-            valid = (not sc._jsc.sc().isStopped()) and sig.is_cached
-        except Exception:  # noqa: BLE001 — any py4j breakage means "rebuild"
-            valid = False
-        if not valid:
-            _SIG_MEMO.pop(key, None)
-            sig = None
-    if sig is None:
-        # prune entries bound to other (dead) contexts so the memo
-        # stays one-entry-per-(live session, sf)
-        for k in [k for k in _SIG_MEMO if k[:2] != key[:2]]:
-            _SIG_MEMO.pop(k, None)
-        # The BUILD runs at defaultParallelism (split_words repartition:
-        # the shingle+md5 pass is CPU-bound and must not inherit a
-        # single-file layout), but the CACHE is compacted to a
-        # row-count-proportional partition count (~64k sig rows ≈ 8 MB
-        # per partition, unclamped above so a 100 TB corpus still gets
-        # hundreds of thousands of cache partitions). Inheriting the
-        # build's fixed fan-out instead meant every downstream query —
-        # dedup_near, the LSH closure, the incremental probe, the
-        # recall gates, every bench pass — launched defaultParallelism
-        # scan tasks over kilobyte partitions: pure scheduler overhead
-        # that at sf0.1 dominated the whole hot path (the r9 verdict's
-        # one >2x-baseline query). count() on parquet is a metadata
-        # read, so sizing costs no data pass.
-        n_docs = t(spark, sf, "documents").count()  # eager-by-design: cache-partition sizing
-        target = max(1, -(-n_docs // 64_000))
-        # ONE md5 pass for the whole text-dedup family (r10 verdict
-        # task: simhash parsed halves of the same digest minhash
-        # truncated, in a second full pass). Each distinct shingle's
-        # hex digest is computed once; the 60-bit minhash base and the
-        # two 32-bit simhash halves all parse from it, and one
-        # map-side-combined aggregate builds the k minhash minima AND
-        # the 64 simhash bit votes together. The cache stays O(docs):
-        # (doc_id, sig array, simhash long) — the exploded shingle
-        # rows are never cached.
-        words = F.col("words")
-        shingles = F.array_distinct(
-            F.transform(
-                F.sequence(F.lit(1), F.greatest(F.size(words) - 2, F.lit(1))),
-                lambda i: F.concat_ws(" ", F.slice(words, i, 3)),
-            )
+def _minhash_sig(spark: SparkSession, sf: str) -> DataFrame:
+    """(doc_id, sig array<long>, simhash long), one row per document:
+    the k minhash minima and the 64-bit simhash of each document's
+    shingle set. Lazy and built per call; a query that reads it from
+    more than one place builds it once and passes it on (see
+    :func:`_incremental_minhash_pairs`)."""
+    # The BUILD runs at defaultParallelism (split_words repartition:
+    # the shingle+md5 pass is CPU-bound and must not inherit a
+    # single-file layout), but the OUTPUT is compacted to a
+    # row-count-proportional partition count (~64k sig rows ≈ 8 MB
+    # per partition, unclamped above so a 100 TB corpus still gets
+    # hundreds of thousands of partitions). Inheriting the build's
+    # fixed fan-out instead meant every downstream stage — the band
+    # explode of dedup_near, the LSH closure, the incremental probe,
+    # the recall gates — launched defaultParallelism tasks over
+    # kilobyte partitions: pure scheduler overhead that at sf0.1
+    # dominated the whole hot path (the r9 verdict's one
+    # >2x-baseline query). count() on parquet is a metadata read, so
+    # sizing costs no data pass.
+    n_docs = t(spark, sf, "documents").count()  # eager-by-design: signature partition sizing
+    target = max(1, -(-n_docs // 64_000))
+    # ONE md5 pass for the whole text-dedup family (r10 verdict task:
+    # simhash parsed halves of the same digest minhash truncated, in a
+    # second full pass). Each distinct shingle's hex digest is computed
+    # once; the 60-bit minhash base and the two 32-bit simhash halves
+    # all parse from it, and one map-side-combined aggregate builds the
+    # k minhash minima AND the 64 simhash bit votes together. The
+    # output stays O(docs): (doc_id, sig array, simhash long).
+    words = F.col("words")
+    shingles = F.array_distinct(
+        F.transform(
+            F.sequence(F.lit(1), F.greatest(F.size(words) - 2, F.lit(1))),
+            lambda i: F.concat_ws(" ", F.slice(words, i, 3)),
         )
-        tok = (
-            split_words(spark, sf)
-            # null-proof words so every doc keeps its one ""-shingle row
-            # (concat_ws over a null slice was already "" in the
-            # array-based build; membership must not change)
-            .select("doc_id", F.coalesce(words, F.array(F.lit(""))).alias("words"))
-            .select("doc_id", F.explode_outer(shingles).alias("s"))
-            .select("doc_id", F.md5("s").alias("m"))
-            .select(
-                "doc_id",
-                F.conv(F.substring("m", 1, 15), 16, 10).cast("long").alias("h"),
-                F.conv(F.substring("m", 1, 8), 16, 10).cast("long").alias("h1"),
-                F.conv(F.substring("m", 9, 8), 16, 10).cast("long").alias("h2"),
-            )
+    )
+    tok = (
+        split_words(spark, sf)
+        # null-proof words so every doc keeps its one ""-shingle row
+        # (concat_ws over a null slice was already "" in the
+        # array-based build; membership must not change)
+        .select("doc_id", F.coalesce(words, F.array(F.lit(""))).alias("words"))
+        .select("doc_id", F.explode_outer(shingles).alias("s"))
+        .select("doc_id", F.md5("s").alias("m"))
+        .select(
+            "doc_id",
+            F.conv(F.substring("m", 1, 15), 16, 10).cast("long").alias("h"),
+            F.conv(F.substring("m", 1, 8), 16, 10).cast("long").alias("h1"),
+            F.conv(F.substring("m", 9, 8), 16, 10).cast("long").alias("h2"),
         )
-        aggs = [
-            F.min((F.lit(a) * (F.col("h") % _MH_P) + F.lit(b)) % _MH_P).alias(f"_s{j}")
-            for j, (a, b) in enumerate(_mh_perm_consts())
-        ]
-        aggs += [
-            F.sum(
-                F.when(
-                    F.shiftright(F.col("h1" if i < 32 else "h2"), i % 32)
-                    .bitwiseAND(F.lit(1))
-                    == 1,
-                    1,
-                ).otherwise(-1)
-            ).alias(f"_b{i}")
-            for i in range(64)
-        ]
-        votes = tok.groupBy("doc_id").agg(*aggs)
-        simhash = F.lit(0).cast("long")
-        for i in range(64):
-            bit = F.when(F.col(f"_b{i}") > 0, F.lit(1)).otherwise(F.lit(0)).cast("long")
-            simhash = simhash.bitwiseOR(F.shiftleft(bit, i))
-        sig = (
-            votes.select(
-                "doc_id",
-                F.array(*[F.col(f"_s{j}") for j in range(_K)]).alias("sig"),
-                simhash.alias("simhash"),
-            )
-            .repartition(target, "doc_id")
-            .cache()
-        )
-        sig.count()  # eager-by-design: materialize the reused-signature cache
-        _SIG_MEMO[key] = sig
-    return sig
+    )
+    aggs = [
+        F.min((F.lit(a) * (F.col("h") % _MH_P) + F.lit(b)) % _MH_P).alias(f"_s{j}")
+        for j, (a, b) in enumerate(_mh_perm_consts())
+    ]
+    aggs += [
+        F.sum(
+            F.when(
+                F.shiftright(F.col("h1" if i < 32 else "h2"), i % 32)
+                .bitwiseAND(F.lit(1))
+                == 1,
+                1,
+            ).otherwise(-1)
+        ).alias(f"_b{i}")
+        for i in range(64)
+    ]
+    votes = tok.groupBy("doc_id").agg(*aggs)
+    simhash = F.lit(0).cast("long")
+    for i in range(64):
+        bit = F.when(F.col(f"_b{i}") > 0, F.lit(1)).otherwise(F.lit(0)).cast("long")
+        simhash = simhash.bitwiseOR(F.shiftleft(bit, i))
+    return votes.select(
+        "doc_id",
+        F.array(*[F.col(f"_s{j}") for j in range(_K)]).alias("sig"),
+        simhash.alias("simhash"),
+    ).repartition(target, "doc_id")
 
 
 def _band_rows(sig_df: DataFrame) -> DataFrame:
@@ -655,11 +620,8 @@ def dedup_near(spark: SparkSession, sf: str) -> DataFrame:
     # longs per entry), so candidate pairs come out of a bucket
     # expansion already holding both signatures — no band-key
     # self-join (which evaluated the signature subtree once per
-    # side), no signature re-join by id. The sig table itself is
-    # still cached+materialized: consumers (the recall gates join
-    # this query against its exact twin) re-evaluate the plan from
-    # several subtrees, and the cache pins the one expensive stage.
-    sig = _minhash_sig_cached(spark, sf)
+    # side), no signature re-join by id.
+    sig = _minhash_sig(spark, sf)
     bands = _band_rows(sig)
     blocks = _capped_band_blocks(bands)
     est = F.aggregate(
@@ -921,13 +883,11 @@ def dedup_simhash(spark: SparkSession, sf: str) -> DataFrame:
     12, random pairs at median 32 (gated by
     ``recall_dedup_simhash``).
     """
-    # The signature comes from the SHARED family cache
-    # (_minhash_sig_cached): one md5 pass per session computes each
-    # distinct shingle's digest and folds both 32-bit simhash halves
-    # AND the 60-bit minhash base into one aggregate — this query and
-    # the whole minhash family (dedup_near, the LSH closure, the
-    # incremental probe) reuse the same O(docs) cached rows.
-    sig = _minhash_sig_cached(spark, sf).select("doc_id", "simhash")
+    # The signature is the minhash family's (_minhash_sig): one md5
+    # pass computes each distinct shingle's digest and folds both
+    # 32-bit simhash halves AND the 60-bit minhash base into one
+    # aggregate; this query keeps only the simhash column.
+    sig = _minhash_sig(spark, sf).select("doc_id", "simhash")
     # 4 × 16-bit chunks: near-dups (Hamming distance ≤ 3) share ≥1 chunk.
     chunks = F.array(
         *[
@@ -1424,10 +1384,10 @@ def _sig_est(a: str, b: str) -> F.Column:
 
 def _incr_cutoff(id_frame: DataFrame) -> DataFrame:
     """1-row (c) cutoff frame: min + frac·range of doc_id, exact
-    integer floor. Derive it from the CACHED signature table where one
-    is in scope — the scalar subtree re-enters the plan once per
-    consumer, and reading it off the cache avoids repeated parquet
-    column scans (5 consumers at one point; at corpus scale each was a
+    integer floor. Derive it from a checkpointed frame where one is in
+    scope — the scalar subtree re-enters the plan once per consumer,
+    and reading it off the checkpoint avoids repeated parquet column
+    scans (5 consumers at one point; at corpus scale each was a
     full doc_id pass)."""
     return id_frame.agg(
         F.floor(
@@ -1439,14 +1399,16 @@ def _incr_cutoff(id_frame: DataFrame) -> DataFrame:
     )
 
 
-def _incremental_minhash_pairs(spark: SparkSession, sf: str) -> DataFrame:
+def _incremental_minhash_pairs(sig: DataFrame) -> DataFrame:
     """Candidate near-dup pairs (doc_a < doc_b, est_jaccard) where
     doc_b is a delta document: corpus-probe hits plus within-delta
-    block pairs. Shared by the classification query and its recall
-    gate. Because corpus ids all precede the cutoff and delta ids
-    follow it, normalizing corpus-probe pairs as (corpus, delta) and
-    delta pairs as (min, max) yields doc_a < doc_b everywhere."""
-    sig = _minhash_sig_cached(spark, sf)
+    block pairs, from the signature table ``sig``
+    (:func:`_minhash_sig`). Shared by the classification query and its
+    recall gate, which both read ``sig`` elsewhere too and so pass in
+    the one they built. Because corpus ids all precede the cutoff and
+    delta ids follow it, normalizing corpus-probe pairs as (corpus,
+    delta) and delta pairs as (min, max) yields doc_a < doc_b
+    everywhere."""
     bands = _band_rows(sig.crossJoin(F.broadcast(_incr_cutoff(sig))))
     corpus_bands = bands.where(F.col("doc_id") < F.col("c")).select(
         "doc_id", "sig", "band", "band_sig"
@@ -1593,7 +1555,9 @@ def dedup_incremental_minhash(spark: SparkSession, sf: str) -> DataFrame:
     the standing corpus is re-read or re-hashed. Pair expansion
     streams through chained generators exactly as ``dedup_near``.
     """
-    sig = _minhash_sig_cached(spark, sf)
+    # eager-by-design: the signature is read three times below (the
+    # cutoff, the delta ids and the pair stream)
+    sig = _minhash_sig(spark, sf).localCheckpoint(eager=True)
     cutoff = _incr_cutoff(sig)
     delta_docs = (
         sig.select("doc_id")
@@ -1601,7 +1565,7 @@ def dedup_incremental_minhash(spark: SparkSession, sf: str) -> DataFrame:
         .where(F.col("doc_id") >= F.col("c"))
         .select("doc_id", "c")
     )
-    pairs = _incremental_minhash_pairs(spark, sf).where(
+    pairs = _incremental_minhash_pairs(sig).where(
         F.col("est_jaccard") >= _INCR_MINHASH_TAU
     )
     # doc_a < doc_b always, and corpus ids < cutoff <= delta ids: a
@@ -2524,7 +2488,7 @@ def join_set_similarity_verify(spark: SparkSession, sf: str) -> DataFrame:
     downstream clustering (dedup_connected_lsh) can consume these
     verified edges unchanged.
     """.format(num=_SETSIM_NUM, den=_SETSIM_DEN)
-    sig = _minhash_sig_cached(spark, sf)
+    sig = _minhash_sig(spark, sf)
     bands = _band_rows(sig.select("doc_id", "sig")).select("doc_id", "band", "band_sig")
     # narrow capped blocks: same window-cap + collect_list discipline
     # as _capped_band_blocks, but doc ids only — the verify stage

@@ -270,14 +270,16 @@ def recall_dedup_incremental_minhash(spark: SparkSession, sf: str) -> DataFrame:
     within-delta block pairs (>= 0.95; the banding is identical to the
     batch ``dedup_near``, so a found pair cannot be lost by splitting
     the corpus, and the measured recall is 1.0)."""
-    cutoff = dedup._incr_cutoff(dedup._minhash_sig_cached(spark, sf))
+    # eager-by-design: the signature feeds both the cutoff and the pair stream
+    sig = dedup._minhash_sig(spark, sf).localCheckpoint(eager=True)
+    cutoff = dedup._incr_cutoff(sig)
     truth = (
         dedup.dedup_ngram_jaccard(spark, sf)
         .crossJoin(F.broadcast(cutoff))
         .where(F.col("doc_b") >= F.col("c"))
         .select("doc_a", "doc_b")
     )
-    cand = dedup._incremental_minhash_pairs(spark, sf).select(
+    cand = dedup._incremental_minhash_pairs(sig).select(
         F.col("doc_a").alias("ca"), F.col("doc_b").alias("cb")
     )
     hit = F.sum(F.when(F.col("ca").isNotNull(), 1).otherwise(0))

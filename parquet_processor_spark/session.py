@@ -47,6 +47,9 @@ _FAIR_POOLS_XML = """<?xml version="1.0" encoding="UTF-8"?>
 """
 
 
+_PACKAGE_PARENT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+
+
 def _fair_pools_file() -> str:
     path = os.path.join(tempfile.gettempdir(), "ppspark_fairscheduler.xml")
     # atomic-ish: write then rename so a concurrent session never reads
@@ -114,6 +117,13 @@ def get_spark(
         # (one pool, one job); concurrent tenants share by weight.
         .config("spark.scheduler.mode", "FAIR")
         .config("spark.scheduler.allocation.file", _fair_pools_file())
+        # Python workers unpickle UDFs that reference this package's
+        # functions, so they must import it whatever directory the
+        # program was launched from: put the directory holding the
+        # package on their path (Spark merges it with the inherited
+        # PYTHONPATH). A cluster whose executors do not see this path
+        # ships the package with --py-files instead.
+        .config("spark.executorEnv.PYTHONPATH", _PACKAGE_PARENT)
     )
     for k, v in (extra_conf or {}).items():
         builder = builder.config(k, v)

@@ -317,6 +317,7 @@ def test_incremental_minhash_pairs_match_batch(spark, sf_dir):
     from parquet_processor_spark.ops.dedup import (
         _INCR_DEDUP_CUTOFF_FRAC,
         _incremental_minhash_pairs,
+        _minhash_sig,
         dedup_near,
     )
     from parquet_processor_spark.tables import t
@@ -332,7 +333,7 @@ def test_incremental_minhash_pairs_match_batch(spark, sf_dir):
     }
     inc = {
         (r["doc_a"], r["doc_b"])
-        for r in _incremental_minhash_pairs(spark, sf_dir).collect()
+        for r in _incremental_minhash_pairs(_minhash_sig(spark, sf_dir)).collect()
     }
     assert inc == batch
 

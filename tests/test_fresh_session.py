@@ -69,3 +69,107 @@ def test_numeric_results_independent_of_partitioning(spark, sf_dir):
         a = sorted(map(tuple, qs[name](wide, sf_dir).collect()))
         b = sorted(map(tuple, qs[name](narrow, sf_dir).collect()))
         assert a == b, f"{name}: result depends on partition count"
+
+
+_REWRITE_QUERIES = ("dedup_near", "dedup_simhash", "sim_topk_ivfpq", "sink_ann_index_upsert")
+
+
+def _stage(dst, src: str) -> None:
+    # copyfile, not copy: the testdata files are read-only, and a copied
+    # mode bit would make the rewrite below fail
+    import shutil
+
+    dst.mkdir(exist_ok=True)
+    for table in ("documents", "embeddings"):
+        shutil.copyfile(f"{src}/{table}.parquet", dst / f"{table}.parquet")
+
+
+def test_rewritten_tables_give_the_new_contents_rows(spark, sf_dir, tmp_path):
+    # A query's rows are a function of the files it reads. Rewriting the
+    # tables at the same path, with no clearCache() in between, must give
+    # exactly the rows of a fresh directory holding the new files — no
+    # signature table or index part may survive from the first run.
+    import os
+
+    from parquet_processor_spark.registry import all_queries
+
+    qs = all_queries()
+
+    def run(d) -> dict:
+        return {n: sorted(map(tuple, qs[n](spark, str(d)).collect())) for n in _REWRITE_QUERIES}
+
+    larger = os.path.join(os.path.dirname(sf_dir), "sf0.01")
+    shared = tmp_path / "shared"
+    _stage(shared, sf_dir)
+    old = run(shared)  # first use of the path: this is the fresh-directory run
+    _stage(shared, larger)
+    new = run(shared)
+    fresh = tmp_path / "fresh"
+    _stage(fresh, larger)
+    expected = run(fresh)
+    assert old != new, "the two contents must give different rows, or this test proves nothing"
+    for name in _REWRITE_QUERIES:
+        assert new[name] == expected[name], f"{name}: rows of the overwritten tables' old contents"
+
+
+def test_trained_ivf_queries_build_off_the_main_thread(spark, sf_dir):
+    # The trained-centroid kernels broadcast through the frame's own
+    # session: SparkSession.getActiveSession() is thread-local and is
+    # None on a thread that never set one.
+    import threading
+
+    from parquet_processor_spark.registry import all_queries
+
+    qs = all_queries()
+    names = ("sim_topk_ivfpq", "sim_topk_ivf_trained")
+    got: dict = {}
+    errors: list = []
+
+    def build() -> None:
+        try:
+            for name in names:
+                got[name] = sorted(map(tuple, qs[name](spark, sf_dir).collect()))
+        except Exception as exc:  # noqa: BLE001 — re-raised on the main thread
+            errors.append(exc)
+
+    worker = threading.Thread(target=build)
+    worker.start()
+    worker.join(timeout=600)
+    assert not worker.is_alive(), "build thread did not finish"
+    assert not errors, errors
+    for name in names:
+        assert got[name] == sorted(map(tuple, qs[name](spark, sf_dir).collect())), name
+
+
+def test_python_udf_query_runs_from_another_directory(sf_dir, tmp_path):
+    # The Python workers must import the package whatever directory the
+    # program was launched from, with no PYTHONPATH: its UDFs reference
+    # package functions by module.
+    import os
+    import subprocess
+    import sys
+    from pathlib import Path
+
+    repo = str(Path(__file__).resolve().parents[1])
+    script = (
+        "import sys\n"
+        f"sys.path.insert(0, {repo!r})\n"
+        "from parquet_processor_spark.registry import all_queries\n"
+        "from parquet_processor_spark.session import get_spark\n"
+        "spark = get_spark('other-cwd', cpus=2, shuffle_partitions=2)\n"
+        "spark.sparkContext.setLogLevel('ERROR')\n"
+        f"print(len(all_queries()['multimodal_features'](spark, {sf_dir!r}).collect()))\n"
+        "spark.stop()\n"
+    )
+    env = {k: v for k, v in os.environ.items() if k != "PYTHONPATH"}
+    env["SPARK_GRAFT_DRIVER_MEM"] = "1g"
+    proc = subprocess.run(
+        [sys.executable, "-c", script],
+        cwd=tmp_path,
+        env=env,
+        capture_output=True,
+        text=True,
+        timeout=600,
+    )
+    assert proc.returncode == 0, proc.stderr[-4000:]
+    assert int(proc.stdout.strip().splitlines()[-1]) > 0

@@ -344,8 +344,8 @@ def test_no_driver_actions_under_ops():
     # construction materializes data eagerly and splits one query into
     # driver-synchronized jobs. Scalar thresholds must be 1-row
     # broadcast joins instead (the filter_by_quantile pattern). The
-    # few deliberate barriers (dedup_near's reused-signature cache,
-    # sink round-trips, bucketed-table setup) carry an explicit
+    # few deliberate barriers (partition sizing, sink round-trips,
+    # bucketed-table setup) carry an explicit
     # "eager-by-design" marker comment.
     from pathlib import Path
 
@@ -364,6 +364,58 @@ def test_no_driver_actions_under_ops():
         and not line.lstrip().startswith("#")
     ]
     assert not offenders, f"driver-side action in ops/ (use a 1-row broadcast join): {offenders}"
+
+
+# --- io.materializing_count: the fixpoint probe's private-API contract --
+
+
+def _jobs_in_group(spark, group: str, fn) -> tuple[object, int]:
+    """(fn(), number of Spark jobs it ran), counted by the status
+    tracker under a job group of this thread."""
+    sc = spark.sparkContext
+    sc.setJobGroup(group, group)
+    try:
+        out = fn()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
+    return out, len(sc.statusTracker().getJobIdsForGroup(group))
+
+
+def test_materializing_count_runs_one_job_on_a_narrow_plan(spark):
+    from parquet_processor_spark.io import materializing_count
+
+    base = spark.range(0, 1000, numPartitions=4).localCheckpoint(eager=True)
+    narrow = base.where(F.col("id") % 3 == 0).select((F.col("id") * 2).alias("x"))
+    n, jobs = _jobs_in_group(spark, "materializing-count-narrow", lambda: materializing_count(narrow))
+    assert n == 334
+    assert jobs == 1
+
+
+def test_materializing_count_materializes_a_lazy_checkpoint(spark):
+    # The count over a lazily local-checkpointed frame is the job that
+    # fills the checkpoint: a later action reads the checkpointed blocks
+    # and never runs the upstream plan again. The Python UDF counts
+    # upstream row evaluations through an accumulator.
+    from pyspark.sql.types import LongType
+
+    from parquet_processor_spark.io import materializing_count
+
+    evaluated = spark.sparkContext.accumulator(0)
+
+    def tap(x):
+        evaluated.add(1)
+        return x
+
+    upstream = spark.range(0, 200, numPartitions=4).select(F.udf(tap, LongType())("id").alias("id"))
+    lazy = upstream.localCheckpoint(eager=False)
+    assert evaluated.value == 0
+    assert materializing_count(lazy) == 200
+    assert evaluated.value == 200
+    later = lazy.where(F.col("id") >= 100)
+    assert later.count() == 100
+    assert sorted(r.id for r in later.collect()) == list(range(100, 200))
+    assert evaluated.value == 200, "a later action recomputed the checkpoint's upstream plan"
 
 
 def test_zorder_layout_narrows_both_dimensions(spark, tmp_path):
