@@ -19,8 +19,10 @@ import os
 import shutil
 import tempfile
 
+import pyarrow as pa
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import types as T
+from pyspark.sql.pandas.types import to_arrow_schema
 
 # --- scratch lifecycle ----------------------------------------------------
 
@@ -71,6 +73,16 @@ def materializing_count(df: DataFrame) -> int:
 
 
 # --- sources -------------------------------------------------------------
+
+
+def local_frame(spark: SparkSession, rows: list[dict], schema: T.StructType) -> DataFrame:
+    """Driver-side rows as a JVM local relation (plans as LocalTableScan).
+
+    ``createDataFrame`` over a Python list is a Python RDD: every action
+    on a plan that contains it starts Python worker tasks just to
+    deserialize a few rows. An Arrow table is handed to the JVM once
+    and never runs Python again."""
+    return spark.createDataFrame(pa.Table.from_pylist(rows, schema=to_arrow_schema(schema)))
 
 
 def read_parquet(spark: SparkSession, path: str, recursive: bool = False, merge_schema: bool = False) -> DataFrame:

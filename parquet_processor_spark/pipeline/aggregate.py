@@ -13,6 +13,9 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, Row, SparkSession
 from pyspark.sql import functions as F
 
+from parquet_processor_spark.io import local_frame
+from parquet_processor_spark.pipeline.schemas import STATS_SCHEMA
+
 
 def read_combined(spark: SparkSession, records_dir: str) -> DataFrame:
     """S3+U1: recursive discovery + schema-merging union in one scan."""
@@ -82,7 +85,7 @@ def run_aggregation(spark: SparkSession, records_dir: str, out_dir: str) -> Row:
     df = read_combined(spark, records_dir)
     write_combined(df, out_dir)
     stats = compute_statistics(df)
-    spark.createDataFrame([stats]).coalesce(1).write.mode("overwrite").json(
+    local_frame(spark, [stats.asDict()], STATS_SCHEMA).write.mode("overwrite").json(
         f"{out_dir}/statistics"
     )
     with open(f"{out_dir}/summary.md", "w") as fh:

@@ -17,6 +17,11 @@ from pyspark.sql import types as T
 # (test_parquet_processor.py:426-429).
 MANIFEST_SCHEMA = T.StructType([T.StructField("url", T.StringType(), True)])
 
+# Global-index side table: first manifest position of each scan partition.
+OFFSETS_SCHEMA = T.StructType(
+    [T.StructField("_pid", T.IntegerType(), True), T.StructField("_offset", T.LongType(), True)]
+)
+
 # Base field catalog (test_parquet_processor.py:81-101), names already
 # normalized (lower, spaces→_, parens stripped — :255).
 BASE_FIELDS = (

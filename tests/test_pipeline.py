@@ -127,6 +127,40 @@ def test_aggregation_job(spark, manifest, tmp_path):
     assert os.path.exists(str(tmp_path / "agg" / "summary.md"))
     combined = spark.read.option("header", True).csv(str(tmp_path / "agg" / "combined_csv"))
     assert combined.count() == stats.total_records
+    # statistics/ is written with STATS_SCHEMA: read back with no schema,
+    # per-file record counts are integers (not JSON strings), and the row
+    # is the returned stats (the JSON writer omits null fields, so the
+    # unknown per-file sizes are absent).
+    [written] = spark.read.json(str(tmp_path / "agg" / "statistics")).collect()
+    written = written.asDict(recursive=True)
+    assert all(isinstance(f["records"], int) for f in written["source_files"])
+    expected = stats.asDict()
+    expected["source_files"] = [
+        {k: v for k, v in f.items() if v is not None} for f in stats.source_files
+    ]
+    assert written == expected
+
+
+def test_run_pipeline_layout_is_deterministic(spark, manifest, tmp_path):
+    # The records/ layout depends only on the fan-out and the segments:
+    # each fetch task writes at most one file per segment, the same on
+    # every run, and every row's segment is its batch_index's range label.
+    num_tasks, size = 4, 20
+    n_files = []
+    for i in range(3):
+        out = str(tmp_path / f"out{i}")
+        run_pipeline(
+            spark, manifest, out, fake_transport, segment_size=size, num_tasks=num_tasks, canary=False
+        )
+        n_files.append(
+            sum(f.endswith(".parquet") for _, _, fs in os.walk(f"{out}/records") for f in fs)
+        )
+        for r in spark.read.parquet(f"{out}/records").select("batch_index", "segment").collect():
+            seg = r["batch_index"] // size
+            assert r["segment"] == f"{seg * size // 1000}k-{(seg + 1) * size // 1000}k"
+    n_segments = -(-60 // size)
+    assert len(set(n_files)) == 1, n_files
+    assert n_files[0] <= num_tasks * n_segments, n_files
 
 
 def test_scrape_schema_contract():

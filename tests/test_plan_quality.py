@@ -649,6 +649,10 @@ def test_global_index_offsets_join_not_casewhen(spark, tmp_path):
     assert "BroadcastHashJoin" in plan, plan
     n_when = plan.count("CASE WHEN")
     assert n_when <= 2, f"offset chain leaked back as CaseWhen branches:\n{plan}"
+    # the offsets table is a JVM local relation, not a Python RDD (which
+    # would start Python tasks every time the index plan runs)
+    assert "LocalTableScan" in plan, plan
+    assert "Scan ExistingRDD" not in plan, plan
     # and the index itself must still be a dense 0..N-1 sequence
     got = sorted(r["batch_index"] for r in idx.collect())
     assert got == list(range(64))
